@@ -177,6 +177,11 @@ def main(argv: list[str] | None = None) -> int:
     from youcruit_tap_rawpostgresql_spark.state import StateStore
     from youcruit_tap_rawpostgresql_spark.tap import SparkTap
 
+    # Singer messages are UTF-8 and RECORD text is not ASCII-escaped: a
+    # non-UTF-8 locale must not turn a non-ASCII row into an encode error
+    enc = getattr(sys.stdout, "encoding", None)
+    if enc and enc.lower().replace("-", "") != "utf8":
+        sys.stdout.reconfigure(encoding="utf-8")
     spark = get_session(app_name="tap-rawpostgresql-spark")
     if args.sf_dir:
         register_testdata(spark, args.sf_dir)

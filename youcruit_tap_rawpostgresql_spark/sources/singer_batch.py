@@ -21,9 +21,13 @@ no inference pass over 100 TB of gzip.
 
 from __future__ import annotations
 
+import base64
+import datetime as _dt
+import decimal as _decimal
 import gzip
 import io
 import json
+import math
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
@@ -157,8 +161,6 @@ class SingerBatchReader(DataSourceReader):
 
 
 def _parse_ts(v):
-    import datetime as _dt
-
     if v is None:
         return None
     # the sink writes ISO-8601 with offset; fromisoformat handles both
@@ -170,15 +172,14 @@ def _json_cast(dtype):
     """JSON scalar → the Python value pyspark's Arrow conversion expects
     for ``dtype``. JSON under-types relative to the declared schema:
     timestamps/dates arrive as ISO strings, decimals as floats, binary as
-    base64 text (Spark's JSON writer encoding)."""
-    import base64
-    import datetime as _dt
-    import decimal as _decimal
-
+    base64 text, non-finite doubles as the strings "NaN"/"Infinity"/
+    "-Infinity" (Spark's JSON writer encoding)."""
     from pyspark.sql.types import (
         BinaryType,
         DateType,
         DecimalType,
+        DoubleType,
+        FloatType,
         TimestampNTZType,
         TimestampType,
     )
@@ -193,6 +194,8 @@ def _json_cast(dtype):
         return lambda v: _decimal.Decimal(str(v)) if v is not None else None
     if isinstance(dtype, BinaryType):
         return lambda v: base64.b64decode(v) if v is not None else None
+    if isinstance(dtype, (DoubleType, FloatType)):
+        return lambda v: float(v) if isinstance(v, str) else v
     return lambda v: v
 
 
@@ -214,7 +217,7 @@ def _read_batch_file(url: str, schema):
     names = schema.fieldNames()
     casts = [_json_cast(f.dataType) for f in schema.fields]
     with _open_url(url) as raw:
-        with gzip.open(io.BufferedReader(raw), "rt") as fh:
+        with gzip.open(io.BufferedReader(raw), "rt", encoding="utf-8") as fh:
             for line in fh:
                 if not line.strip():
                     continue
@@ -232,9 +235,11 @@ def _arrow_fast_schema(schema):
     and the per-row conversion gone entirely).
 
     Eligible: integer/float/string/boolean scalars, and TIMESTAMP — the
-    sink writes ISO-8601 with an explicit offset (``jsonable_value``
-    pins naive to +00:00), which Arrow parses into timestamp(us, UTC),
-    bit-identical to the ``fromisoformat`` path (oracle-gated).
+    sink writes ISO-8601 with an explicit offset (``sink.JSON_OPTIONS``),
+    which Arrow parses into timestamp(us, UTC), bit-identical to the
+    ``fromisoformat`` path (oracle-gated). A file holding a non-finite
+    double (a JSON string) fails the fast parse and takes the per-row
+    path.
     NOT eligible (fall back per-row): decimals (JSON floats must become
     ``Decimal(str(v))``, not a binary-double cast), binary (base64
     text), dates, TIMESTAMP_NTZ, and nested types."""
@@ -433,6 +438,62 @@ class SingerBatchStreamReader(DataSourceStreamReader):
 
 # --- writer side: df.write.format("singer_batch").save(root) ------------
 
+def _java_double(x: float) -> str:
+    """``x`` as Java's ``Double.toString`` spells it (what Spark's JSON
+    generator writes): plain in [1e-3, 1e7), else ``d.dddE<n>``;
+    non-finite values are the strings Jackson quotes them as."""
+    if math.isnan(x):
+        return '"NaN"'
+    if math.isinf(x):
+        return '"Infinity"' if x > 0 else '"-Infinity"'
+    if x == 0 or 1e-3 <= abs(x) < 1e7:
+        return repr(x)
+    d = _decimal.Decimal(repr(x)).normalize()
+    two = f"{x:.1e}"
+    if len(d.as_tuple().digits) == 1 and float(two) == x:
+        # Java picks the closest of the one- and two-digit spellings that
+        # round-trip (5e-324 is 4.9E-324)
+        d = _decimal.Decimal(two).normalize()
+    sign, digits, exp = d.as_tuple()
+    mant = "".join(map(str, digits))
+    frac = mant[1:] or "0"
+    return f"{'-' if sign else ''}{mant[0]}.{frac}E{exp + len(mant) - 1}"
+
+
+def _record_json(v) -> str:
+    """One record (``Row.asDict(recursive=True)``) as compact JSON text,
+    rendered as ``sink.JSON_OPTIONS`` renders it in the JVM: timestamps
+    with microseconds and ``+00:00`` (naive values are UTC, the session
+    time zone), decimals as numbers at their scale, binary as base64,
+    non-finite doubles as strings, NULLs kept, raw UTF-8 text."""
+    if v is None:
+        return "null"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        return _java_double(v)
+    if isinstance(v, _decimal.Decimal):
+        return str(v)
+    if isinstance(v, str):
+        return json.dumps(v, ensure_ascii=False)
+    if isinstance(v, _dt.datetime):
+        return f'"{v.isoformat(timespec="microseconds")}+00:00"'
+    if isinstance(v, _dt.date):
+        return f'"{v.isoformat()}"'
+    if isinstance(v, (bytes, bytearray)):
+        return f'"{base64.b64encode(bytes(v)).decode("ascii")}"'
+    if isinstance(v, dict):
+        return "{" + ",".join(
+            f"{json.dumps(str(k), ensure_ascii=False)}:{_record_json(x)}"
+            for k, x in v.items()
+        ) + "}"
+    if isinstance(v, (list, tuple)):
+        return "[" + ",".join(_record_json(x) for x in v) + "]"
+    raise TypeError(f"singer_batch write: cannot render {type(v).__name__}")
+
+
 @dataclass
 class _WroteFiles(WriterCommitMessage):
     urls: list[str]
@@ -452,9 +513,10 @@ class SingerBatchWriter(DataSourceWriter):
     consumes), and a manifest read returns exactly one job's output while
     a directory read returns the union — both semantics are deliberate.
     ``mode("overwrite")`` clears previous data files AND manifests up
-    front. Record serialization delegates to ``sink.jsonable_value`` —
-    one contract for every JSON-emitting path (naive timestamps pinned
-    to +00:00, structs as objects, binary as base64).
+    front. Records render through ``_record_json``, which writes the
+    same JSON text as the sink's JVM rendering (``sink.JSON_OPTIONS``),
+    so a file from this writer and one from ``sink.write_batch_files``
+    read back alike.
 
     Local filesystems only: remote schemes raise up front instead of
     silently writing to a local directory named ``s3a:/...``.
@@ -494,10 +556,7 @@ class SingerBatchWriter(DataSourceWriter):
         import os
         import uuid as _uuid
 
-        from youcruit_tap_rawpostgresql_spark.sink import jsonable_value
-
         root = _local_path(self.path)
-        names = self.schema.fieldNames()
         urls: list[str] = []
         n_total = 0
         fh = None
@@ -513,14 +572,10 @@ class SingerBatchWriter(DataSourceWriter):
                         f"-{len(urls)}.json.gz"
                     )
                     fpath = os.path.join(root, fname)
-                    fh = gzip.open(fpath, "wt")
+                    fh = gzip.open(fpath, "wt", encoding="utf-8")
                     urls.append(f"file://{fpath}")
                     n_in_file = 0
-                rec = {
-                    k: jsonable_value(v)
-                    for k, v in row.asDict(recursive=True).items()
-                }
-                fh.write(json.dumps(rec) + "\n")
+                fh.write(_record_json(row.asDict(recursive=True)) + "\n")
                 n_in_file += 1
                 n_total += 1
         finally:
