@@ -405,7 +405,10 @@ def test_lsh_probe_verdict_memoized(spark, tmp_path):
     mutated data, so a memo hit there would serve a stale verdict."""
     from pyspark.sql import functions as F
 
+    from youcruit_tap_rawpostgresql_spark.memo import MEMOS
     from youcruit_tap_rawpostgresql_spark.querybank import llm
+
+    probes = MEMOS["llm.lsh_probe"]
 
     def sig_of(df):
         return df.select(
@@ -418,19 +421,19 @@ def test_lsh_probe_verdict_memoized(spark, tmp_path):
     path = str(tmp_path / "sig")
     spark.range(50).write.parquet(path)
     sig = sig_of(spark.read.parquet(path))
-    llm._PROBE_MEMO.clear()
+    probes.clear()
     llm.minhash_lsh_pairs(sig, bucket_cap=16).count()
-    assert len(llm._PROBE_MEMO) == 1
-    before = dict(llm._PROBE_MEMO)
+    assert (probes.hits, probes.misses, len(probes)) == (0, 1, 1)
     llm.minhash_lsh_pairs(sig, bucket_cap=16).count()
-    assert llm._PROBE_MEMO == before  # hit, not a second entry
+    assert (probes.hits, probes.misses, len(probes)) == (1, 1, 1)  # hit
     llm.minhash_lsh_pairs(sig, bucket_cap=3).count()
-    assert len(llm._PROBE_MEMO) == 2  # different cap → its own verdict
+    # different cap → its own verdict
+    assert (probes.hits, probes.misses, len(probes)) == (1, 2, 2)
 
     # data-lake append: new files → new snapshot key → re-probe fires
     spark.range(50, 100).write.mode("append").parquet(path)
     llm.minhash_lsh_pairs(sig_of(spark.read.parquet(path)), bucket_cap=16).count()
-    assert len(llm._PROBE_MEMO) == 3
+    assert (probes.hits, probes.misses, len(probes)) == (1, 3, 3)
 
     # IN-PLACE overwrite of the same path (round-7 self-review: was a
     # documented KNOWN LIMITATION): for local files the snapshot carries
@@ -443,15 +446,15 @@ def test_lsh_probe_verdict_memoized(spark, tmp_path):
     st = _os.stat(part)
     _os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
     llm.minhash_lsh_pairs(sig_of(spark.read.parquet(path)), bucket_cap=16).count()
-    assert len(llm._PROBE_MEMO) == 4
+    assert (probes.hits, probes.misses, len(probes)) == (1, 4, 4)
 
     # non-file-backed plans are probed every time, never memoized
-    llm._PROBE_MEMO.clear()
+    probes.clear()
     mem_sig = sig_of(spark.range(50))
     assert mem_sig.inputFiles() == []
     llm.minhash_lsh_pairs(mem_sig, bucket_cap=16).count()
     llm.minhash_lsh_pairs(mem_sig, bucket_cap=16).count()
-    assert llm._PROBE_MEMO == {}
+    assert (probes.hits, probes.misses, len(probes)) == (0, 2, 0)
 
 
 def test_lsh_probe_memo_engages_on_cached_sig_frame(spark):
@@ -462,10 +465,12 @@ def test_lsh_probe_memo_engages_on_cached_sig_frame(spark):
     round's only perf defect: 0.43 s -> 1.28 s warm at sf0.1). The fix
     snapshots the SOURCE file list before caching and rides it on the
     frame (`_ytrs_src_files`); this pins that the memo now engages."""
+    from youcruit_tap_rawpostgresql_spark.memo import MEMOS
     from youcruit_tap_rawpostgresql_spark.querybank import llm
 
-    llm._PROBE_MEMO.clear()
-    llm._SIG_CACHE.clear()
+    probes, sigs = MEMOS["llm.lsh_probe"], MEMOS["llm.minhash_signatures"]
+    probes.clear()
+    sigs.clear()
     sf_dir = "/root/testdata/sf0.001"
     sig = llm._minhash_sig_df(spark, sf_dir)
     # parquet-backed source ⇒ the pre-cache snapshot must be present even
@@ -473,17 +478,19 @@ def test_lsh_probe_memo_engages_on_cached_sig_frame(spark):
     assert sig.inputFiles() == []
     assert getattr(sig, "_ytrs_src_files", ()) != ()
     llm.minhash_lsh_pairs(sig).count()
-    assert len(llm._PROBE_MEMO) == 1
-    before = dict(llm._PROBE_MEMO)
+    assert (probes.hits, probes.misses, len(probes)) == (0, 1, 1)
     llm.minhash_lsh_pairs(sig).count()
-    assert llm._PROBE_MEMO == before  # steady-state rerun: memo hit
-    # the registry entry itself rides the same memoized path
+    # steady-state rerun: memo hit
+    assert (probes.hits, probes.misses, len(probes)) == (1, 1, 1)
+    # the registry entry itself rides the same memoized path: the
+    # signature frame and the probe verdict are both hits
     from youcruit_tap_rawpostgresql_spark.querybank import REGISTRY
 
     REGISTRY["dedup_minhash_lsh"].fn(spark, sf_dir).count()
-    assert llm._PROBE_MEMO == before
-    llm._SIG_CACHE.clear()
-    llm._PROBE_MEMO.clear()
+    assert (probes.hits, probes.misses, len(probes)) == (2, 1, 1)
+    assert (sigs.hits, sigs.misses) == (1, 1)
+    sigs.clear()
+    probes.clear()
 
 
 def test_cosine_threshold_blocked_fallback_matches_closure(spark, monkeypatch):
@@ -542,14 +549,17 @@ def test_ivf_pruned_store_keeps_shared_index_persisted(spark):
     per-invocation unpersist left the frame in the memo unpersisted, so
     the case's own repeat attempts and every later consumer in the
     session silently recomputed the index kernel on each scan."""
+    from youcruit_tap_rawpostgresql_spark.memo import MEMOS
     from youcruit_tap_rawpostgresql_spark.querybank import REGISTRY
-    from youcruit_tap_rawpostgresql_spark.querybank.ann import _ANN_INDEX_MEMO
+    from youcruit_tap_rawpostgresql_spark.querybank.ann import ann_index_df
 
     sfd = "/root/testdata/sf0.001"
     REGISTRY["sim_ann_ivf_pruned_store"].fn(spark, sfd).count()
-    hit = _ANN_INDEX_MEMO.get("index")
-    assert hit is not None
-    assert hit[1].storageLevel.useMemory, (
+    index = MEMOS["ann.index"]
+    hits, misses = index.hits, index.misses
+    idx = ann_index_df(spark, sfd)
+    assert (index.hits, index.misses) == (hits + 1, misses)  # the memoized frame
+    assert idx.storageLevel.useMemory, (
         "shared ANN index was unpersisted by sim_ann_ivf_pruned_store"
     )
 
@@ -719,12 +729,13 @@ def test_ann_index_fused_matches_standalone(spark):
     """r14 fused index build: the one-pass (sig, cell1/cell2, codes)
     kernel must reproduce each standalone builder's output EXACTLY —
     lsh_signatures (sig per vec), ivf_rank_cells (the top-2 cell ranking,
-    via the cached view's posexplode derivation), and pq_codes_df (the
-    M-subspace code word per vec)."""
+    as a posexplode of the index's cell1/cell2 columns), and pq_codes_df
+    (the M-subspace code word per vec)."""
+    from pyspark.sql import functions as F
+
     from youcruit_tap_rawpostgresql_spark.querybank.ann import (
         ann_index_df,
         ivf_rank_cells,
-        ivf_rank_cells_cached,
         lsh_signatures,
         pq_codes_df,
     )
@@ -741,7 +752,15 @@ def test_ann_index_fused_matches_standalone(spark):
     assert fused_sigs == want_sigs and len(fused_sigs) > 0
 
     fused_rank = sorted(
-        tuple(r) for r in ivf_rank_cells_cached(spark, sfd).collect()
+        tuple(r)
+        for r in idx.select("vec_id", F.posexplode(F.array("cell1", "cell2")))
+        .filter(F.col("col").isNotNull())
+        .select(
+            "vec_id",
+            F.col("col").alias("cent_id"),
+            (F.col("pos") + 1).cast("int").alias("crank"),
+        )
+        .collect()
     )
     want_rank = sorted(tuple(r) for r in ivf_rank_cells(spark, sfd).collect())
     assert fused_rank == want_rank and len(fused_rank) > 0

@@ -702,22 +702,25 @@ def test_persist_leak_bounded_across_invocations(spark, sf_dir):
 
 
 def test_persist_scoped_drops_previous(spark):
-    from youcruit_tap_rawpostgresql_spark.querybank.helpers import (
-        _LIVE_PERSISTS,
-        persist_scoped,
-    )
+    from youcruit_tap_rawpostgresql_spark.memo import MEMOS
+    from youcruit_tap_rawpostgresql_spark.querybank.helpers import persist_scoped
 
+    slots = MEMOS["helpers.persist_scoped"]
     a = persist_scoped("t.x", spark.range(10))
     a.count()
     assert a.storageLevel.useMemory
+    n = len(slots)
     b = persist_scoped("t.x", spark.range(20))
     b.count()
     # the previous frame under the tag was unpersisted; the new one is live
     assert not a.storageLevel.useMemory
     assert b.storageLevel.useMemory
-    assert _LIVE_PERSISTS["t.x"] is b
-    b.unpersist()
-    del _LIVE_PERSISTS["t.x"]
+    assert slots.peek("t.x") is b and len(slots) == n  # one slot per tag
+    # a frame whose plan equals the released one's still ends up cached
+    c = persist_scoped("t.x", spark.range(20))
+    c.count()
+    assert c.storageLevel.useMemory
+    c.unpersist()
 
 
 def test_spread_keyed_skips_exchange_on_wide_input(spark):
@@ -747,6 +750,13 @@ def test_spread_keyed_skips_exchange_on_wide_input(spark):
     # the probe says the input already covers the cores: same frame back,
     # no added exchange on top of the input's own plan
     assert out2 is wide
+    # the split probe is memoized per (session, plan, cores)
+    from youcruit_tap_rawpostgresql_spark.memo import MEMOS
+
+    spreads = MEMOS["helpers.spread"]
+    hits, misses = spreads.hits, spreads.misses
+    assert spread_keyed(wide, "k") is wide
+    assert (spreads.hits, spreads.misses) == (hits + 1, misses)
 
 
 def test_broadcast_scoped_unpersists_previous(spark):
@@ -754,20 +764,19 @@ def test_broadcast_scoped_unpersists_previous(spark):
     but stays RECOMPUTE-CORRECT (round-8 self-review: destroy() would
     make a stale lazy result from a prior invocation fail on
     re-execution; unpersist re-ships from the driver instead)."""
-    from youcruit_tap_rawpostgresql_spark.querybank.helpers import (
-        _LIVE_BROADCASTS,
-        broadcast_scoped,
-    )
+    from youcruit_tap_rawpostgresql_spark.memo import MEMOS
+    from youcruit_tap_rawpostgresql_spark.querybank.helpers import broadcast_scoped
 
+    slots = MEMOS["helpers.broadcast_scoped"]
     a = broadcast_scoped("t.b", spark, b"x" * 1024)
+    n = len(slots)
     b = broadcast_scoped("t.b", spark, b"y" * 1024)
-    assert _LIVE_BROADCASTS["t.b"] is b
+    assert slots.peek("t.b") is b and len(slots) == n  # one slot per tag
     assert b.value[:1] == b"y"
     # the replaced broadcast still resolves (driver copy retained) — a
     # stale plan that re-executes re-broadcasts rather than crashing
     assert a.value[:1] == b"x"
     b.unpersist()
-    del _LIVE_BROADCASTS["t.b"]
 
 
 def test_stream_quarantine_file_sink_equals_memory_sink(spark, sf_dir, tmp_path):
@@ -875,3 +884,64 @@ def test_grouped_map_topk_matches_apply_in_pandas(spark, sf_dir):
     plan = REGISTRY["grouped_map_topk"].fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" not in plan
     assert "MapInPandas" in plan
+
+
+def test_grouped_map_topk_keeps_null_group(spark, sf_dir, tmp_path):
+    """A NULL user_id is one group, as in the per-group applyInPandas
+    form: the batched carry mask and groupby must not drop it."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from youcruit_tap_rawpostgresql_spark.querybank import REGISTRY
+    from youcruit_tap_rawpostgresql_spark.querybank.registry import tables
+
+    for f in os.listdir(sf_dir):
+        if f != "events.parquet":
+            os.symlink(os.path.join(sf_dir, f), tmp_path / f)
+    ev = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    uid = ev.column("user_id")
+    nulled = pc.if_else(
+        pc.equal(pc.bit_wise_and(uid, pa.scalar(7, pa.int64())), 0),
+        pa.scalar(None, pa.int64()),
+        uid,
+    )
+    ev = ev.set_column(ev.schema.get_field_index("user_id"), "user_id", nulled)
+    pq.write_table(ev, tmp_path / "events.parquet")
+    sfd = str(tmp_path)
+
+    def top2(pdf):
+        pdf = pdf.sort_values(["value", "event_id"], ascending=[False, True]).head(2)
+        pdf = pdf.reset_index(drop=True)
+        pdf["rnk"] = pdf.index + 1
+        return pdf[["user_id", "event_id", "rnk"]]
+
+    out_schema = T.StructType(
+        [
+            T.StructField("user_id", T.LongType()),
+            T.StructField("event_id", T.LongType()),
+            T.StructField("rnk", T.LongType()),
+        ]
+    )
+    key = lambda r: (r[0] is not None, r[0] or 0, r[1], r[2])  # noqa: E731
+    reference = sorted(
+        (
+            tuple(r)
+            for r in tables(spark, sfd)["events"]
+            .select("user_id", "event_id", "value")
+            .groupBy("user_id")
+            .applyInPandas(top2, out_schema)
+            .collect()
+        ),
+        key=key,
+    )
+    got = sorted(
+        (tuple(r) for r in REGISTRY["grouped_map_topk"].fn(spark, sfd).collect()),
+        key=key,
+    )
+    assert any(r[0] is None for r in reference)
+    assert got == reference
+    tables(spark, sf_dir)  # point the session's temp views back at the fixture

@@ -512,7 +512,9 @@ def test_adjacent_literals_never_pair_across(b1, b2):
     assert f"'{b2}'" in out
 
 
-@given(st.from_regex(r"[a-z0-9_]{1,8}", fullmatch=True))
+# identifiers only: a digit-led name such as `0x0` makes `0x0_e` a PG16
+# hex literal, which the dialect rightly folds to a number
+@given(st.from_regex(r"[a-z_][a-z0-9_]{0,7}", fullmatch=True))
 def test_identifier_trailing_e_is_not_a_prefix(name):
     sql = f"SELECT {name}_e'x' AS s"
     assert f"{name}_e'x'" in translate_pg_sql(sql)

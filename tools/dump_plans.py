@@ -1,9 +1,10 @@
 """Dump `.explain("formatted")` for every bench headliner to
-plans/r13/<query>_<tag>.txt (tag = before/after). Non-adaptive so exchange
+<outdir>/<query>_<tag>.txt (tag = before/after). Non-adaptive so exchange
 reuse and join strategies are statically visible (same convention as
 tools/gen_plans.py). sf0.1 — the bench scale.
 
-Usage: python tools/dump_plans_r13.py before|after [name ...]
+Usage: python tools/dump_plans.py <outdir> before|after [name ...]
+(e.g. ``plans/r14`` as outdir)
 """
 
 from __future__ import annotations
@@ -17,14 +18,13 @@ SF_DIR = "/root/testdata/sf0.1"
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    only = set(sys.argv[2:])
+    outdir, tag = sys.argv[1], sys.argv[2]
+    only = set(sys.argv[3:])
     from youcruit_tap_rawpostgresql_spark.querybank import REGISTRY
     from youcruit_tap_rawpostgresql_spark.session import get_session
 
     spark = get_session(app_name="spark-graft-plan-dump", cpus=8)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13")
     os.makedirs(outdir, exist_ok=True)
     for name, case in REGISTRY.items():
         if only:

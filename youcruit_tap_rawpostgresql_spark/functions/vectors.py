@@ -153,21 +153,3 @@ def cosine_f64_block(A: "np.ndarray", B: "np.ndarray"):
     with np.errstate(divide="ignore", invalid="ignore"):
         out = d / n
     return out, n
-
-
-def l2_distance(a, b, dim: int | None = None) -> Column:
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    if dim is not None:
-        sq = []
-        for i in range(1, dim + 1):
-            diff = _dbl(F.element_at(a, i)) - _dbl(F.element_at(b, i))
-            sq.append(diff * diff)
-        return F.sqrt(_chain_sum(sq))
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (_dbl(x) - _dbl(y)) * (_dbl(x) - _dbl(y))),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )

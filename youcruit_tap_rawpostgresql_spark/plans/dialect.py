@@ -499,6 +499,8 @@ import datetime as _dt
 import re
 from typing import Any, Mapping
 
+from youcruit_tap_rawpostgresql_spark.memo import Memo
+
 # PG type name → Spark SQL type name (for :: casts and typed literals)
 _PG_TYPE_RENAMES = {
     "uuid": "string",
@@ -7477,13 +7479,6 @@ def _build_make_interval(args):
     )
 
 
-def _named_error_builder(msg: str):
-    def build(args):
-        raise ValueError(msg)
-
-    return build
-
-
 # interval-valued PG functions with no faithful Spark composition: age()
 # returns PG's symbolic years/months/days interval (a MIXED interval no
 # single Spark type holds; DuckDB's age() returns plain day counts —
@@ -10317,22 +10312,12 @@ def translate_pg_sql(
     return out
 
 
-# ---------------------------------------------------------------------------
-# Translation memo (round-13 optimization; guide §1.2 "per-task work").
-# The pipeline above is a few dozen regex/structural passes over the SQL
-# text (~20 ms for a medium statement, measured) and is a PURE function of
-# (sql, bind, column_types, standard_conforming_strings) whenever no
-# literal parameter substitution happens (the native-bind path leaves
-# ``:name`` markers in place, so params never reach the text). Databases
-# cache exactly this step (prepared statements / plan caches); a bounded
-# FIFO memo makes repeated execution of a fixed statement — the tap's
-# per-stream SQL on every sync, a bench's repeated attempts, an
-# interactive session — pay translation once. This memoizes ONLY the
-# SQL→SQL text rewrite, never results: every execution still plans and
-# computes from the data.
+# Translation memo: the pipeline above is a pure function of (sql, bind,
+# column_types, standard_conforming_strings) whenever no literal parameter
+# substitution happens, so a statement the tap runs on every sync pays
+# translation once. Only the SQL text is memoized, never results.
 _translate_pg_sql_impl = translate_pg_sql
-_TRANSLATE_MEMO: dict = {}
-_TRANSLATE_MEMO_MAX = 512
+_TRANSLATIONS = Memo("dialect.translate", bound=512)
 
 
 def translate_pg_sql(  # noqa: F811 — memoizing wrapper over the pipeline
@@ -10342,24 +10327,17 @@ def translate_pg_sql(  # noqa: F811 — memoizing wrapper over the pipeline
     column_types: Mapping[str, str] | None = None,
     standard_conforming_strings: bool = False,
 ) -> str:
-    if params and bind:
-        # literal substitution path: output depends on param VALUES —
-        # translate afresh (the preferred native-bind path never enters
-        # here; see run_sql)
+    def build():
         return _translate_pg_sql_impl(
             sql, params, bind, column_types, standard_conforming_strings
         )
+
+    if params and bind:
+        # literal substitution: the output depends on param VALUES
+        return build()
     ct_key = tuple(sorted(column_types.items())) if column_types else None
     key = (sql, bool(bind), ct_key, bool(standard_conforming_strings))
-    hit = _TRANSLATE_MEMO.get(key)
-    if hit is None:
-        hit = _translate_pg_sql_impl(
-            sql, params, bind, column_types, standard_conforming_strings
-        )
-        if len(_TRANSLATE_MEMO) >= _TRANSLATE_MEMO_MAX:
-            _TRANSLATE_MEMO.pop(next(iter(_TRANSLATE_MEMO)))
-        _TRANSLATE_MEMO[key] = hit
-    return hit
+    return _TRANSLATIONS.get(key, build)
 
 
 translate_pg_sql.__doc__ = _translate_pg_sql_impl.__doc__

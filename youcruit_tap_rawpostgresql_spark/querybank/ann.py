@@ -16,13 +16,14 @@ bit-identical across engines.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from youcruit_tap_rawpostgresql_spark.functions.vectors import cosine_pairs
+from youcruit_tap_rawpostgresql_spark.memo import Memo, input_snapshot, session_key
 from youcruit_tap_rawpostgresql_spark.querybank.helpers import EMB_DIM as _DIM
-from youcruit_tap_rawpostgresql_spark.querybank.helpers import persist_scoped
 from youcruit_tap_rawpostgresql_spark.querybank.registry import register, tables
 
 _N_PLANES = 6
@@ -145,20 +146,14 @@ def lsh_signatures(vecs: DataFrame) -> DataFrame:
 
 
 # Single-slot memo for the FUSED persisted ANN index frame — (vec_id,
-# embedding, sig, cell1, cell2, codes) — one live copy process-wide; a
-# new applicationId, a different sf_dir, or a regenerated fixture (the
-# parquet file snapshot rides in the key) replaces the slot, and
-# persist_scoped unpersists the evicted copy. Before r14 the LSH
-# signatures, the IVF cell ranking, and the PQ codes were three SEPARATE
-# memoized builds — three corpus scans, three Python kernel passes, and
-# three eager materialization jobs on the family's first touch (the
-# driver bench's attempt-1 spikes: sim_ann_lsh 1.6 s / sim_ann_ivf 4.1 s
-# / sim_ann_pq_adc 1.2 s at r13). The three kernels share the embeddings
-# scan and are all per-row, so they now run in ONE mapInPandas pass
-# (guide §1.2: don't pay three passes for work one pass can do); each
+# embedding, sig, cell1, cell2, codes) — one live copy process-wide; a new
+# session, a different sf_dir, or a regenerated fixture (the parquet file
+# snapshot rides in the key) replaces the slot and releases the old frame.
+# The LSH signatures, IVF cell ranking and PQ codes share the embeddings
+# scan and are all per-row, so they run in ONE mapInPandas pass; each
 # per-index view below is a projection of the fused in-memory frame
 # (InMemoryTableScan prunes to the columns a consumer reads).
-_ANN_INDEX_MEMO: dict[str, tuple] = {}
+_ANN_INDEX = Memo("ann.index", bound=1)
 
 
 def _ann_index_build(e: DataFrame, cent_rows: list) -> DataFrame:
@@ -237,60 +232,46 @@ def _ann_index_build(e: DataFrame, cent_rows: list) -> DataFrame:
 
 def ann_index_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized persisted fused ANN index frame shared by the whole
-    similarity family (LSH / IVF / PQ consumers).
-
-    Round-8 converted the per-invocation ``.cache()`` of the signature
-    frame to ``persist_scoped``, which (correctly) unpersists the previous
-    invocation's frame — but that also dropped the cross-invocation reuse
-    round 7 was accidentally measuring through the leak, a 2.2× bench
-    regression on sim_ann_lsh (round-9 judge directive 4). This keeps the
-    reuse the honest way — the ``_minhash_sig_df`` pattern (llm.py):
-    memo + persist_scoped composed, so there is exactly ONE live
-    persisted copy across invocations, keyed on (applicationId, sf_dir,
-    fixture file snapshot): nothing survives a process or dataset change,
-    and the driver's cold-JVM runs rebuild everything. Eagerly
-    materialized because every consumer scans it at least twice
+    similarity family (LSH / IVF / PQ consumers): exactly ONE live
+    persisted copy across invocations, keyed on (session, sf_dir, fixture
+    file snapshot), so nothing survives a session or dataset change.
+    Eagerly materialized because every consumer scans it at least twice
     (self-joins / assign + probes) and no exchange reuse exists below a
     Python op."""
-    from youcruit_tap_rawpostgresql_spark.querybank.llm import _file_snapshot
-
     e = tables(spark, sf_dir)["embeddings"]
-    try:
-        snap = _file_snapshot(e.inputFiles())
-    except Exception:
-        snap = ()
-    key = (spark.sparkContext.applicationId, sf_dir, snap)
-    hit = _ANN_INDEX_MEMO.get("index")
-    if hit is not None and hit[0] == key and snap:
-        return hit[1]
-    n = e.count()  # parquet metadata count — cheap
-    stride = ivf_centroid_stride(n)
-    cent_rows = sorted(
-        bounded_collect(
-            e.filter(F.col("vec_id") % stride == 1).select("vec_id", "embedding")
-        ),
-        key=lambda r: r["vec_id"],
-    )
-    # Partitioning policy = vecs_codes_input's row-count gate, NOT the
-    # split-count spread: the persisted frame's partition count is what
-    # every downstream consumer's task count inherits, and at small
-    # corpus sizes 32 near-empty cached partitions cost more in per-task
-    # fixed overhead (Python worker round-trips per consumer stage) than
-    # the build parallelism buys — the r14 A/B measured sim_ann_ivf
-    # steady 1.05→1.9 s and sim_ann_pq_adc 0.66→1.4 s with a 32-way
-    # fused frame vs the sized one. A large corpus (n > 10k and fewer
-    # splits than cores) still fans out to ~5k rows/partition capped at
-    # defaultParallelism; a multi-file production scan keeps its own
-    # splits (guide §2.2: derive from input size, not the local core
-    # count).
-    src = e.select("vec_id", "embedding")
-    par = spark.sparkContext.defaultParallelism
-    if n > 10_000 and src.rdd.getNumPartitions() < par:
-        src = src.repartition(min(par, max(2, n // 5_000)), "vec_id")
-    idx = persist_scoped("ann.index", _ann_index_build(src, cent_rows))
-    idx.count()
-    _ANN_INDEX_MEMO["index"] = (key, idx)
-    return idx
+    snap = input_snapshot(e)
+
+    def build():
+        n = e.count()  # parquet metadata count — cheap
+        stride = ivf_centroid_stride(n)
+        cent_rows = sorted(
+            bounded_collect(
+                e.filter(F.col("vec_id") % stride == 1).select("vec_id", "embedding")
+            ),
+            key=lambda r: r["vec_id"],
+        )
+        # Partitioning policy = vecs_codes_input's row-count gate, NOT the
+        # split-count spread: the persisted frame's partition count is what
+        # every downstream consumer's task count inherits, and at small
+        # corpus sizes 32 near-empty cached partitions cost more in
+        # per-task fixed overhead (Python worker round-trips per consumer
+        # stage) than the build parallelism buys. A large corpus (n > 10k
+        # and fewer splits than cores) still fans out to ~5k rows/partition
+        # capped at defaultParallelism; a multi-file production scan keeps
+        # its own splits (guide §2.2: derive from input size, not the
+        # local core count).
+        src = e.select("vec_id", "embedding")
+        par = spark.sparkContext.defaultParallelism
+        if n > 10_000 and src.rdd.getNumPartitions() < par:
+            src = src.repartition(min(par, max(2, n // 5_000)), "vec_id")
+        idx = _ann_index_build(src, cent_rows).persist(StorageLevel.MEMORY_AND_DISK)
+        idx.count()
+        return idx
+
+    key = (session_key(spark), sf_dir, snap)
+    # without a file snapshot the data version is unknown: rebuild, but
+    # still let the slot own (and later release) the frame
+    return _ANN_INDEX.get(key, build) if snap else _ANN_INDEX.put(key, build)
 
 
 def _lsh_sig_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -520,27 +501,6 @@ def ivf_rank_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return e.select("vec_id", "embedding").mapInPandas(
         rank_batches, "vec_id long, cent_id long, crank int"
-    )
-
-
-def ivf_rank_cells_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, cent_id, crank) view of the fused ANN index — the IVF
-    cell ranking every cell consumer probes (sim_ann_ivf, sim_ann_ivf_pq,
-    dedup_semantic_cluster, cluster_quality_profile,
-    sim_ann_ivf_pruned_store). r14: derives from ``ann_index_df``'s
-    cell1/cell2 columns (a projection + 2-element posexplode of the
-    persisted frame) instead of its own memoized corpus pass — the row
-    multiset is identical to ``ivf_rank_cells`` by construction
-    (equivalence-pinned)."""
-    idx = ann_index_df(spark, sf_dir)
-    return (
-        idx.select("vec_id", F.posexplode(F.array("cell1", "cell2")))
-        .filter(F.col("col").isNotNull())
-        .select(
-            "vec_id",
-            F.col("col").alias("cent_id"),
-            (F.col("pos") + 1).cast("int").alias("crank"),
-        )
     )
 
 

@@ -886,8 +886,8 @@ def dedup_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ship the bitmap as a Spark BROADCAST, not a closure capture: a
     # closure-captured bitmap travels inside every pickled task command
     # (at the 16 MiB cap that bloats each stage submission), a broadcast
-    # ships once per executor (round-8 advisory). Scoped: the previous
-    # invocation's bitmap is destroyed, so repeated runs hold ONE copy
+    # ships once per executor. Scoped: the previous invocation's bitmap
+    # is unpersisted, so repeated runs hold ONE copy
     bc_bloom = broadcast_scoped("dedup_bloom_incremental.bitmap", spark, bloom)
 
     # explicit arity: pandas_udf's type-hint inference rejects *args
@@ -906,10 +906,7 @@ def dedup_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     hcols = [F.col(f"_bh{i}") for i in range(_BLOOM_K)]
     # ONE batch pass: the scan + fingerprint + Arrow prefilter run once
     # and both branches (plus the verify join's probe side) read the
-    # persisted flags — previously the fresh/candidates/verified branches
-    # each re-evaluated the whole chain, 3 passes (round-7 self-review).
-    # persist_scoped bounds the cache to one live copy across repeated
-    # invocations in a long-lived session (round-8 advisory)
+    # persisted flags (one live copy across repeated invocations)
     flagged = persist_scoped(
         "dedup_bloom_incremental.flagged",
         batch.select("doc_id", "source", "fp", *_bloom_hash_cols("fp"))

@@ -5,6 +5,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from youcruit_tap_rawpostgresql_spark.memo import Memo, session_key
+
 # 12,2 (not 18,2): keeps chained decimal products within both engines'
 # 38-digit cap so no precision-loss rounding ever kicks in:
 # (12,2)*(12,2)->(25,4), *(12,2) again -> (38,6) exact.
@@ -50,10 +52,6 @@ def o_davg(expr: str, alias: str) -> str:
     return (
         f"CAST(SUM(CAST({expr} AS DECIMAL(12,2))) AS DOUBLE) / COUNT({expr}) AS {alias}"
     )
-
-
-def o_iso_ts(expr: str, alias: str) -> str:
-    return f"strftime({expr}, '%Y-%m-%d %H:%M:%S') AS {alias}"
 
 
 def o_iso_date(expr: str, alias: str) -> str:
@@ -165,71 +163,43 @@ def spread_keyed(df, *cols):
 def _needs_spread(df):
     """(cores, should-repartition?) — the memoized single-split probe
     shared by spread()/spread_keyed()."""
-    par = df.sparkSession.sparkContext.defaultParallelism
+    spark = df.sparkSession
+    par = spark.sparkContext.defaultParallelism
     try:
-        key = (df.sparkSession.sparkContext.applicationId, df.semanticHash(), par)
+        key = (session_key(spark), df.semanticHash(), par)
     except Exception:  # noqa: BLE001 — probe path works for any frame
         key = None
-    if key is not None and key in _SPREAD_MEMO:
-        needs = _SPREAD_MEMO[key]
-    else:
-        needs = df.rdd.getNumPartitions() < par
-        if key is not None:
-            if len(_SPREAD_MEMO) >= 512:  # bounded, FIFO like the dialect memo
-                _SPREAD_MEMO.pop(next(iter(_SPREAD_MEMO)))
-            _SPREAD_MEMO[key] = needs
-    return par, needs
+    return par, _SPREADS.get(key, lambda: df.rdd.getNumPartitions() < par)
 
 
-_SPREAD_MEMO: dict = {}
-
-
-_LIVE_PERSISTS: dict = {}
+_SPREADS = Memo("helpers.spread", bound=512)
+# one slot per tag (a re-persist under a tag releases the previous frame);
+# the tags are a fixed set of call sites, far fewer than the bound
+_PERSIST_SLOTS = Memo("helpers.persist_scoped", bound=64)
+_BROADCAST_SLOTS = Memo("helpers.broadcast_scoped", bound=64)
 
 
 def persist_scoped(tag: str, df):
-    """Persist ``df`` (MEMORY_AND_DISK), first unpersisting whatever frame
-    was last persisted under ``tag`` — bounds executor-cache growth across
-    long-lived sessions (bench loops, oracle sweeps) to ONE live copy per
-    operator instead of one per invocation (round-8 advisory: persists
-    with no unpersist accumulate across the sessions the repo's own
-    harnesses reuse). Dropping the previous copy is always CORRECT:
-    unpersist only discards cached partitions — a stale handle that is
-    re-collected recomputes from lineage."""
+    """Persist ``df`` (MEMORY_AND_DISK) as the one live frame under
+    ``tag``, unpersisting the frame last persisted under it — bounds
+    executor-cache growth across long-lived sessions (bench loops, oracle
+    sweeps) to ONE live copy per operator instead of one per invocation.
+    Dropping the previous copy is always CORRECT: unpersist only discards
+    cached partitions — a stale handle that is re-collected recomputes
+    from lineage."""
     from pyspark import StorageLevel
 
-    prev = _LIVE_PERSISTS.pop(tag, None)
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:
-            pass  # a stopped/replaced session invalidates old handles
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_PERSISTS[tag] = out
-    return out
-
-
-_LIVE_BROADCASTS: dict = {}
+    return _PERSIST_SLOTS.put(tag, lambda: df.persist(StorageLevel.MEMORY_AND_DISK))
 
 
 def broadcast_scoped(tag: str, spark, value):
-    """Broadcast ``value``, unpersisting whatever broadcast was last made
-    under ``tag`` — the broadcast analogue of ``persist_scoped`` (round-8
-    self-review): each invocation of an operator that broadcasts a
-    multi-MB structure (the sized Bloom bitmap) would otherwise leave the
-    previous copy on every executor until GC happens to collect the old
-    closure. ``unpersist`` (NOT ``destroy``) keeps this recompute-correct
-    like persist_scoped: executor blocks are freed deterministically, but
+    """Broadcast ``value`` as the one live broadcast under ``tag``,
+    unpersisting the broadcast last made under it — the broadcast
+    analogue of ``persist_scoped`` for multi-MB structures (the sized
+    Bloom bitmap). ``unpersist`` (NOT ``destroy``) keeps this
+    recompute-correct: executor blocks are freed deterministically, but
     the driver retains the value, so a stale result handle from a prior
     invocation that is re-executed simply re-ships the broadcast instead
     of failing; the driver-side copy itself is reclaimed by Spark's
     ContextCleaner once the old closure is garbage collected."""
-    prev = _LIVE_BROADCASTS.pop(tag, None)
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:
-            pass  # a stopped/replaced session invalidates old handles
-    bc = spark.sparkContext.broadcast(value)
-    _LIVE_BROADCASTS[tag] = bc
-    return bc
+    return _BROADCAST_SLOTS.put(tag, lambda: spark.sparkContext.broadcast(value))

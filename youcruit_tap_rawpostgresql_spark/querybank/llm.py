@@ -12,6 +12,7 @@ correctness baseline and stay bounded by query-side sampling.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -32,6 +33,7 @@ from youcruit_tap_rawpostgresql_spark.functions.text_funcs import (
     word_shingles,
 )
 from youcruit_tap_rawpostgresql_spark.functions.vectors import cosine_pairs
+from youcruit_tap_rawpostgresql_spark.memo import Memo, input_snapshot, session_key
 from youcruit_tap_rawpostgresql_spark.querybank.registry import register, tables
 
 # ---------------------------------------------------------------------------
@@ -330,7 +332,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # memoized per (session, sf_dir): a re-built mapInPandas plan carries a fresh
 # serialized closure, which can miss Spark's cache-by-plan-equality matching
-_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
+_SIGS = Memo("llm.minhash_signatures", bound=64)
 
 
 def minhash_map_signatures(docs: DataFrame) -> DataFrame:
@@ -407,43 +409,26 @@ def _minhash_sig_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         spread_keyed,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _SIG_CACHE:
-        return _SIG_CACHE[key]
-    d = tables(spark, sf_dir)["documents"]
-    # spread_keyed: hash-repartition ONLY when the fixture arrives as a
-    # single split — on a multi-file production scan the unconditional
-    # repartition this replaced shuffled the full document payload into
-    # the signature build for nothing (r13 opt round, guide §2.4)
-    sig = minhash_map_signatures(spread_keyed(d, "doc_id")).cache()
-    # Snapshot the SOURCE file list BEFORE the cache hides it: a cached
-    # InMemoryRelation returns inputFiles() == (), which (correctly) makes
-    # the probe refuse to memoize — but here immutability is a property of
-    # the underlying parquet files, not the cache. The snapshot rides on
-    # the frame so _probe_oversized_buckets can memoize on it (round-6
-    # judge: without this, every dedup_minhash_lsh run paid a probe job —
-    # a measured ~2-3× steady-state regression).
-    try:
-        src_files = _file_snapshot(d.inputFiles())
-    except Exception:
-        src_files = ()
-    if src_files:
-        sig._ytrs_src_files = src_files
-    # materialize eagerly: the LSH self-join scans sig twice, and a lazily
-    # cached mapInPandas would be computed by BOTH scan stages (no exchange
-    # to reuse downstream of a Python op)
-    sig.count()
-    # evict entries from OTHER applications on insert — same
-    # single-live-application discipline as _COMPONENTS_CACHE
-    # (round-8 advisory)
-    for stale in [k for k in _SIG_CACHE if k[0] != key[0]]:
-        old = _SIG_CACHE.pop(stale)
-        try:
-            old.unpersist(blocking=False)
-        except Exception:
-            pass  # a stopped session already invalidated the handle
-    _SIG_CACHE[key] = sig
-    return sig
+    def build():
+        d = tables(spark, sf_dir)["documents"]
+        # spread_keyed: hash-repartition ONLY when the fixture arrives as
+        # a single split — a multi-file production scan keeps its splits
+        sig = minhash_map_signatures(spread_keyed(d, "doc_id")).cache()
+        # Snapshot the SOURCE files before the cache hides them: a cached
+        # InMemoryRelation returns inputFiles() == (), which would make
+        # the probe refuse to memoize — but immutability is a property of
+        # the underlying parquet files, not the cache. The snapshot rides
+        # on the frame so _probe_oversized_buckets can memoize on it.
+        src_files = input_snapshot(d)
+        if src_files:
+            sig._ytrs_src_files = src_files
+        # materialize eagerly: the LSH self-join scans sig twice, and a
+        # lazily cached mapInPandas would be computed by BOTH scan stages
+        # (no exchange to reuse downstream of a Python op)
+        sig.count()
+        return sig
+
+    return _SIGS.get((session_key(spark), sf_dir), build)
 
 
 @register(
@@ -531,37 +516,9 @@ _LSH_BUCKET_CAP = 64
 # sense: the verdict is a data property, so repeated runs over the same
 # immutable input files (the data-lake norm — appends create NEW files,
 # which change the key) skip the probe job and go straight to the chosen
-# plan. Bounded size; falls back to probing every time if the plan
-# identity is unavailable.
-_PROBE_MEMO: dict[tuple, bool] = {}
-_PROBE_MEMO_MAX = 64
-
-
-def _file_snapshot(files) -> tuple:
-    """Sorted (uri, size, mtime_ns) triples for a plan's input files.
-
-    Path identity alone does not prove immutability: an IN-PLACE
-    overwrite of the same file path would keep the old memo key and
-    serve a stale probe verdict (round-7 self-review — previously a
-    documented KNOWN LIMITATION, now closed for local files). For
-    ``file:`` URIs the size+mtime ride in the key, so any in-place
-    rewrite changes it; other schemes (object stores, where overwrite
-    PUTs are the caller's own consistency problem) keep path-only keys.
-    """
-    import os
-    from urllib.parse import unquote, urlparse
-
-    out = []
-    for f in sorted(files):
-        size = mtime = -1
-        if f.startswith("file:"):
-            try:
-                st = os.stat(unquote(urlparse(f).path))
-                size, mtime = st.st_size, st.st_mtime_ns
-            except OSError:
-                pass
-        out.append((f, size, mtime))
-    return tuple(out)
+# plan. Falls back to probing every time if the plan identity is
+# unavailable.
+_PROBES = Memo("llm.lsh_probe", bound=64)
 
 
 def lsh_band_keys():
@@ -592,44 +549,34 @@ def _probe_oversized_buckets(sig, band_keys, bucket_cap: int) -> bool:
     (semantic plan hash, sorted input files) so steady-state reruns pay
     zero probe jobs."""
     key = None
-    try:
-        # Memoize ONLY file-backed plans: the snapshot key is the file
-        # list, and immutability is a property of files (data-lake
-        # appends create NEW files → new key). A JDBC read, temp view,
-        # or in-memory frame has inputFiles() == () and an identical
-        # semanticHash across re-reads of MUTATED data — a stale "no
-        # oversized buckets" verdict there would silently disable the
-        # cap. Those sources probe every time (one cheap scalar agg).
-        # A CACHED signature frame also reports inputFiles() == (), so
-        # builders that cache (e.g. _minhash_sig_df) snapshot the source
-        # file list pre-cache and attach it as `_ytrs_src_files` — that
-        # snapshot is the same immutability evidence and re-enables the
-        # memo on the flagship LSH path (round-6 judge directive 1).
-        # Snapshots carry (size, mtime) for local files (_file_snapshot)
-        # so an in-place overwrite of the same paths changes the key.
-        files = getattr(sig, "_ytrs_src_files", None) or _file_snapshot(
-            sig.inputFiles()
-        )
-        if files:
+    # Memoize ONLY file-backed plans: the snapshot key is the file list,
+    # and immutability is a property of files (data-lake appends create
+    # NEW files → new key). A JDBC read, temp view, or in-memory frame
+    # has inputFiles() == () and an identical semanticHash across
+    # re-reads of MUTATED data — a stale "no oversized buckets" verdict
+    # there would silently disable the cap, so those sources probe every
+    # time (one cheap scalar agg). A CACHED signature frame also reports
+    # inputFiles() == (), so builders that cache (_minhash_sig_df) attach
+    # the pre-cache source snapshot as `_ytrs_src_files`.
+    files = getattr(sig, "_ytrs_src_files", None) or input_snapshot(sig)
+    if files:
+        try:
             plan_id = sig._jdf.queryExecution().analyzed().semanticHash()
-            key = (plan_id, tuple(files), bucket_cap)
-    except Exception:
-        pass
-    if key is not None and key in _PROBE_MEMO:
-        return _PROBE_MEMO[key]
-    max_n = (
-        sig.select(F.posexplode(band_keys).alias("band_idx", "band_key"))
-        .groupBy("band_idx", "band_key")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .agg(F.max("_n"))
-        .first()[0]
-    )
-    verdict = max_n is not None and max_n > bucket_cap
-    if key is not None:
-        if len(_PROBE_MEMO) >= _PROBE_MEMO_MAX:
-            _PROBE_MEMO.pop(next(iter(_PROBE_MEMO)))
-        _PROBE_MEMO[key] = verdict
-    return verdict
+            key = (plan_id, files, bucket_cap)
+        except (AttributeError, Py4JError):
+            pass  # no plan identity: probe afresh
+
+    def probe() -> bool:
+        max_n = (
+            sig.select(F.posexplode(band_keys).alias("band_idx", "band_key"))
+            .groupBy("band_idx", "band_key")
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .agg(F.max("_n"))
+            .first()[0]
+        )
+        return max_n is not None and max_n > bucket_cap
+
+    return _PROBES.get(key, probe)
 
 
 def minhash_lsh_pairs(
@@ -675,8 +622,7 @@ def minhash_lsh_pairs(
             persist_scoped,
         )
 
-        # scoped: one live cached copy across repeated invocations in a
-        # long-lived session (round-8 advisory leak class)
+        # scoped: one live cached copy across repeated invocations
         oversized = persist_scoped(
             "lsh_candidates.oversized",
             bands.groupBy("band_idx", "band_key")
@@ -1277,7 +1223,7 @@ FROM reach GROUP BY node
 """
 
 
-_COMPONENTS_CACHE: dict = {}
+_COMPONENTS = Memo("llm.dedup_components", bound=64)
 
 
 @register("dedup_components", oracle=_o_components())
@@ -1287,7 +1233,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same graph with a recursive CTE). component_id = min doc_id in the
     cluster — the canonical keeper.
 
-    MEMOIZED per (session, sf_dir), the `_SIG_CACHE` pattern: the fixture
+    MEMOIZED per (session, sf_dir), like the signature frame: the fixture
     parquet is immutable, and every fixpoint round localCheckpoints a
     frame whose blocks live until session end — at sf10 the edge list
     alone is a 16M-row checkpoint, so REPEATED invocations in one JVM
@@ -1303,25 +1249,13 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from youcruit_tap_rawpostgresql_spark.querybank.registry import REGISTRY
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _COMPONENTS_CACHE:
-        return _COMPONENTS_CACHE[key]
-    pairs = REGISTRY["dedup_minhash_lsh"].fn(spark, sf_dir).select("a_id", "b_id")
-    out = connected_components(pairs).select(
-        F.col("node").alias("doc_id"), F.col("component").alias("component_id")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    # evict entries from OTHER applications on insert (round-8 advisory):
-    # a restarted session in one process would otherwise accumulate
-    # persisted-DataFrame handles keyed by dead applicationIds forever —
-    # the single-live-application discipline persist_scoped established
-    for stale in [k for k in _COMPONENTS_CACHE if k[0] != key[0]]:
-        old = _COMPONENTS_CACHE.pop(stale)
-        try:
-            old.unpersist(blocking=False)
-        except Exception:
-            pass  # a stopped session already invalidated the handle
-    _COMPONENTS_CACHE[key] = out
-    return out
+    def build():
+        pairs = REGISTRY["dedup_minhash_lsh"].fn(spark, sf_dir).select("a_id", "b_id")
+        return connected_components(pairs).select(
+            F.col("node").alias("doc_id"), F.col("component").alias("component_id")
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+
+    return _COMPONENTS.get((session_key(spark), sf_dir), build)
 
 
 @register(

@@ -19,6 +19,7 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from youcruit_tap_rawpostgresql_spark.memo import Memo, session_key
 from youcruit_tap_rawpostgresql_spark.sources.registry import register_testdata
 
 
@@ -32,26 +33,29 @@ class QueryCase:
 
 REGISTRY: dict[str, QueryCase] = {}
 
-# cache of (id(spark), sf_dir) -> {table: DataFrame} so 50+ queries don't
-# re-read parquet footers over and over during a correctness sweep
-_TABLE_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
-# temp views are session-global and last-writer-wins, so when one session
-# alternates scale factors the views must be re-registered even though the
-# per-SF DataFrames are cached — otherwise spark.sql()-based queries read
-# the OTHER scale factor's views while DataFrame-based queries read the
-# right data (caught by a cross-SF test run)
-_ACTIVE_SF: dict[int, str] = {}
+# per (session, sf_dir) fixture frames, so 50+ queries don't re-read
+# parquet footers over and over during a correctness sweep
+_TABLES = Memo("registry.tables", bound=64)
+# the sf_dir each session's temp views show: views are session-global and
+# last-writer-wins, so a session that alternates scale factors must
+# re-register them even though the per-SF frames are memoized
+_VIEWS = Memo("registry.views", bound=64)
 
 
 def tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    key = (id(spark), sf_dir)
-    if key not in _TABLE_CACHE:
-        _TABLE_CACHE[key] = register_testdata(spark, sf_dir)
-    elif _ACTIVE_SF.get(id(spark)) != sf_dir:
-        for name, df in _TABLE_CACHE[key].items():
+    session = session_key(spark)
+
+    def load():
+        frames = register_testdata(spark, sf_dir)  # creates the views too
+        _VIEWS.put((session,), lambda: sf_dir)
+        return frames
+
+    frames = _TABLES.get((session, sf_dir), load)
+    if _VIEWS.peek((session,)) != sf_dir:
+        for name, df in frames.items():
             df.createOrReplaceTempView(name)
-    _ACTIVE_SF[id(spark)] = sf_dir
-    return _TABLE_CACHE[key]
+        _VIEWS.put((session,), lambda: sf_dir)
+    return frames
 
 
 def register(name: str, oracle: Optional[str] = None, headline: bool = False):
