@@ -99,10 +99,12 @@ def main() -> None:
         },
     }
     # stop the session BEFORE printing so the one-line JSON is the FINAL
-    # stdout line with nothing after it (the r12 driver capture lost the
-    # line to truncation; nothing this process can do about a 2000-char
-    # tail, but it can guarantee no trailing output displaces the line)
-    spark.stop()
+    # stdout line with nothing after it; a failing stop must not lose the
+    # measurement, so it is reported on stderr and the line still prints
+    try:
+        spark.stop()
+    except Exception as e:  # noqa: BLE001 — the result line must print
+        print(f"spark.stop() failed: {type(e).__name__}: {e}", file=sys.stderr)
     print(json.dumps(out), flush=True)
 
 

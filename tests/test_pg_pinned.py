@@ -28,7 +28,13 @@ from youcruit_tap_rawpostgresql_spark.plans.dialect import translate_pg_sql
 
 def one(spark, select_body: str):
     """Translate and execute ``SELECT <select_body>``, return the row."""
-    return spark.sql(translate_pg_sql(f"SELECT {select_body}")).first()
+    from youcruit_tap_rawpostgresql_spark.plans.executor import (
+        ensure_pg_functions_for,
+    )
+
+    text = translate_pg_sql(f"SELECT {select_body}")
+    ensure_pg_functions_for(spark, text)
+    return spark.sql(text).first()
 
 
 # --- substring(x FROM 'regex') ----------------------------------------------

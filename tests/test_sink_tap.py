@@ -634,6 +634,46 @@ def test_cli_test_mode(spark, tmp_path, capsys):
     assert "FAILED" in err
 
 
+def test_cli_sync_metric_lines_on_stderr(spark, tmp_path, capsys):
+    """A CLI sync writes only Singer messages to stdout, and the tap's
+    Singer SDK METRIC lines (record_count, sync_duration) to stderr."""
+    import logging
+
+    from youcruit_tap_rawpostgresql_spark.cli import main
+
+    cfg = {
+        "database": "postgres",
+        "streams": [
+            {
+                "name": "metric_probe",
+                "sql": "SELECT 1 AS one UNION ALL SELECT 2",
+                "columns": [{"name": "one", "type": "int", "nullable": False}],
+                "key_properties": ["one"],
+            }
+        ],
+    }
+    path = tmp_path / "config.json"
+    path.write_text(json.dumps(cfg))
+    pkg_log = logging.getLogger("youcruit_tap_rawpostgresql_spark")
+    handlers = list(pkg_log.handlers)
+    assert main(["--config", str(path)]) == 0
+    out, err = capsys.readouterr()
+    msgs = [json.loads(line) for line in out.splitlines()]
+    assert [m["type"] for m in msgs] == ["SCHEMA", "RECORD", "RECORD", "STATE"]
+    metrics = [
+        json.loads(line.split("METRIC: ", 1)[1])
+        for line in err.splitlines()
+        if "METRIC: " in line
+    ]
+    by_name = {m["metric"]: m for m in metrics}
+    assert by_name["record_count"]["value"] == 2
+    assert by_name["record_count"]["tags"] == {"stream": "postgres-public-metric_probe"}
+    assert by_name["sync_duration"]["type"] == "timer"
+    assert by_name["sync_duration"]["value"] > 0
+    # the handler lives only for the CLI call
+    assert pkg_log.handlers == handlers
+
+
 def test_tap_sync_to_versioned_target(spark, sf_dir, tmp_path):
     """Warehouse-target sync mode: first sync commits a full snapshot;
     each later incremental sync commits ONE new version (upsert on the

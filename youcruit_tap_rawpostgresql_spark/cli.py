@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import logging
 import sys
 
 
@@ -58,6 +59,24 @@ def _config_from_env() -> dict:
 
 
 def main(argv: list[str] | None = None) -> int:
+    """Run the CLI with the package's log records (INFO and up, which
+    include the Singer ``METRIC:`` lines) on stderr; stdout carries only
+    Singer messages. The root and py4j loggers are left alone, and the
+    handler is removed on return."""
+    pkg_log = logging.getLogger("youcruit_tap_rawpostgresql_spark")
+    handler = logging.StreamHandler(sys.stderr)
+    handler.setFormatter(logging.Formatter("%(levelname)s %(name)s: %(message)s"))
+    level = pkg_log.level
+    pkg_log.addHandler(handler)
+    pkg_log.setLevel(logging.INFO)
+    try:
+        return _main(argv)
+    finally:
+        pkg_log.removeHandler(handler)
+        pkg_log.setLevel(level)
+
+
+def _main(argv: list[str] | None) -> int:
     p = argparse.ArgumentParser(prog="tap-rawpostgresql-spark")
     p.add_argument(
         "--config",

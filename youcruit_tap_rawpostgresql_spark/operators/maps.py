@@ -78,11 +78,21 @@ def apply_stream_map(
     """Apply one stream's map config to its DataFrame (``__`` directives
     like ``__source__`` are stream-level, handled by the tap).
     ``map_vars`` is the tap's ``stream_map_config`` dict."""
+    from youcruit_tap_rawpostgresql_spark.plans.executor import (
+        ensure_pg_functions_for,
+    )
+
+    def expr(text: str):
+        text = _bind_map_vars(text, map_vars)
+        # map expressions may call the PG extension functions too
+        ensure_pg_functions_for(df.sparkSession, text)
+        return F.expr(text)
+
     out = df
-    for name, expr in (map_config.get("derive") or {}).items():
-        out = out.withColumn(name, F.expr(_bind_map_vars(expr, map_vars)))
+    for name, text in (map_config.get("derive") or {}).items():
+        out = out.withColumn(name, expr(text))
     if map_config.get("filter"):
-        out = out.filter(F.expr(_bind_map_vars(map_config["filter"], map_vars)))
+        out = out.filter(expr(map_config["filter"]))
     for col in map_config.get("mask") or []:
         out = out.withColumn(col, F.sha2(F.col(col).cast("string"), 256))
     for old, new in (map_config.get("rename") or {}).items():

@@ -8,6 +8,7 @@ semantics follow ``client.py:260-298``.
 
 from __future__ import annotations
 
+import re
 import weakref as _weakref
 from typing import Any, Mapping
 
@@ -50,28 +51,61 @@ RETURN CASE WHEN a IS NULL OR b IS NULL THEN CAST(NULL AS DOUBLE)
 """,
 )
 
+# Every function ``ensure_pg_functions`` registers. Registration (the
+# SQL-UDF DDLs and the pandas UDFs) costs ~1.2 s in a process's first
+# session on 4 cores and ~0.3 s in later ones, far more than a plain
+# stream's own ``spark.sql``, so it runs only for text that calls one of
+# these.
+PG_FUNCTION_NAMES = (
+    "trgm_set",
+    "similarity",
+    "jsonb_set",
+    "jsonb_insert",
+    "jsonb_strip_nulls",
+    "jsonb_concat",
+    "jsonb_delete_key",
+    "jsonb_delete_index",
+    "jsonb_delete_path",
+    "jsonb_contains",
+    "json_each_entries",
+    "json_each_text_entries",
+    "jsonb_each_entries",
+    "jsonb_each_text_entries",
+)
+_PG_FUNCTION_CALL_RE = re.compile(
+    r"\b(?:" + "|".join(PG_FUNCTION_NAMES) + r")\s*\(", re.IGNORECASE
+)
+
 _PG_FUNCTIONS_READY: "_weakref.WeakSet" = _weakref.WeakSet()
 
 
 def ensure_pg_functions(spark: SparkSession) -> None:
-    """Register the PG-extension SQL UDFs once per SparkSession. The memo
+    """Register the PG-extension functions once per SparkSession. The memo
     is a WeakSet of session OBJECTS, not applicationId: temporary
     functions are session-scoped, and ``spark.newSession()`` shares the
-    applicationId but not the function registry (round-8 self-review —
-    an id-keyed memo would skip registration on the second session and
-    similarity() would fail analysis there)."""
+    applicationId but not the function registry, so an id-keyed memo
+    would skip registration on the second session and similarity()
+    would fail analysis there."""
     if spark in _PG_FUNCTIONS_READY:
         return
     for ddl in _PG_FUNCTION_DDL:
         spark.sql(ddl)
-    # jsonb mutators (round-11): pandas-UDF-backed — Spark has no json
-    # mutation expression; see functions/jsonb.py for the PG semantics
+    # jsonb mutators: pandas-UDF-backed — Spark has no json mutation
+    # expression; see functions/jsonb.py for the PG semantics
     from youcruit_tap_rawpostgresql_spark.functions.jsonb import (
         register_jsonb_mutators,
     )
 
     register_jsonb_mutators(spark)
     _PG_FUNCTIONS_READY.add(spark)
+
+
+def ensure_pg_functions_for(spark: SparkSession, text: str) -> None:
+    """``ensure_pg_functions`` when Spark SQL ``text`` calls one of
+    ``PG_FUNCTION_NAMES``; otherwise nothing. A name inside a string
+    literal or comment only costs a needless registration."""
+    if _PG_FUNCTION_CALL_RE.search(text):
+        ensure_pg_functions(spark)
 
 
 def run_sql(
@@ -103,17 +137,17 @@ def run_sql(
     if not sql or not sql.strip():
         raise SpecError("sql must not be empty")  # reference client.py:255-258
     if pg_dialect:
-        ensure_pg_functions(spark)
-    text = (
-        translate_pg_sql(
+        text = translate_pg_sql(
             sql,
             bind=False,
             column_types=column_types,
             standard_conforming_strings=standard_conforming_strings,
         )
-        if pg_dialect
-        else sql
-    )
+        # the translated text, not the input: rewrites such as jsonb
+        # `||` → jsonb_concat() introduce calls the input never spells
+        ensure_pg_functions_for(spark, text)
+    else:
+        text = sql
     if params:
         return spark.sql(text, args=dict(params))
     return spark.sql(text)
